@@ -30,6 +30,7 @@ The tiering is how 100 TB training-data dedup actually works:
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -765,8 +766,9 @@ def connected_components(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
     n_buckets = int(os.environ.get("SPARK_GRAFT_CC_EDGE_BUCKETS", "8"))
-    t_edges = f"cc_edges_{os.getuid()}_{os.getpid()}"
-    _drop_bucket_table(spark, t_edges)
+    # per-call name: two calls in one driver (threaded query execution)
+    # must never drop or overwrite each other's table mid-loop
+    t_edges = f"cc_edges_{os.getuid()}_{os.getpid()}_{uuid.uuid4().hex}"
     # repartition on the bucket key first so each task writes exactly ONE
     # bucket file (the r16 bucketed-write convention; one file per bucket
     # is also what lets the scan report the per-bucket sort order)

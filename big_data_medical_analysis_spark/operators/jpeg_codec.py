@@ -287,20 +287,33 @@ def encode_jpeg(img: np.ndarray, quality: int = 75) -> bytes:
 # canonical Huffman code of length L owns exactly the 2^(16-L) table slots
 # prefixed by it. The LUT is a pure function of the DHT payload, memoized
 # process-wide (same footing as the _DCT constant — derived from the input
-# bytes of the CURRENT stream, not from any dataset).
-_LUT_CACHE: dict[tuple[tuple[int, ...], tuple[int, ...]], tuple[list, list]] = {}
+# bytes of the CURRENT stream, not from any dataset). Capped: an encoder
+# that emits per-image optimized tables would otherwise grow it by ~1 MB
+# per distinct table for the life of the executor; eviction is FIFO, so a
+# hit stays a single dict lookup.
+_LUT_CACHE: dict[tuple[bool, tuple[int, ...], tuple[int, ...]], tuple[list, list]] = {}
+_LUT_CACHE_MAX = 64
 
 
-def _build_lut(bits: list[int], vals: list[int]) -> tuple[list, list]:
-    key = (tuple(bits), tuple(vals))
+def _build_lut(dc: bool, bits: list[int], vals: list[int]) -> tuple[list, list]:
+    key = (dc, tuple(bits), tuple(vals))
     hit = _LUT_CACHE.get(key)
     if hit is not None:
         return hit
+    if len(bits) < 16 or len(vals) < sum(bits):
+        raise ValueError("invalid Huffman table: truncated DHT")
+    # a DC symbol is the bit length of the difference that follows it
+    if dc and max(vals, default=0) > 15:
+        raise ValueError(f"invalid Huffman table: DC category {max(vals)} > 15")
     syms = [-1] * (1 << 16)
     lens = [0] * (1 << 16)
     code = 0
     idx = 0
     for length in range(1, 17):
+        # canonical codes of this length run from `code` upward and must
+        # fit in `length` bits; more is an over-subscribed table
+        if code + bits[length - 1] > 1 << length:
+            raise ValueError("invalid Huffman table: over-subscribed code lengths")
         for _ in range(bits[length - 1]):
             lo = code << (16 - length)
             hi = (code + 1) << (16 - length)
@@ -309,6 +322,8 @@ def _build_lut(bits: list[int], vals: list[int]) -> tuple[list, list]:
             code += 1
             idx += 1
         code <<= 1
+    if len(_LUT_CACHE) >= _LUT_CACHE_MAX:
+        _LUT_CACHE.pop(next(iter(_LUT_CACHE)), None)
     _LUT_CACHE[key] = (syms, lens)
     return syms, lens
 
@@ -375,7 +390,7 @@ def decode_jpeg(content: bytes) -> np.ndarray:
                 bits = list(payload[p + 1 : p + 17])
                 nsym = sum(bits)
                 vals = list(payload[p + 17 : p + 17 + nsym])
-                htables[(tc, th)] = _build_lut(bits, vals)
+                htables[(tc, th)] = _build_lut(tc == 0, bits, vals)
                 p += 17 + nsym
         elif marker == 0xDD:
             raise ValueError("restart intervals not supported")

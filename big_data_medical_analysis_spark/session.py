@@ -22,10 +22,6 @@ from pyspark.sql import SparkSession
 # Tuned for the local[32] test harness; on a real cluster these are
 # overridden by spark-submit conf. AQE handles the runtime delta.
 _DEFAULTS: dict[str, str] = {
-    # --- heap: local[N] puts driver+executors in ONE JVM; the 1g default
-    # OOMs long before the 128 GiB box does. Only effective at JVM launch
-    # (getOrCreate), inert when attaching to an existing session. ---
-    "spark.driver.memory": "24g",
     # --- adaptive execution: the 100 TB insurance policy ---
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -49,6 +45,27 @@ _DEFAULTS: dict[str, str] = {
 }
 
 
+def _driver_heap() -> str:
+    """Driver heap sized to the box: 40% of the smaller of physical memory
+    and the cgroup memory limit, clamped to 1-24 GiB. local[N] puts driver
+    and executors in ONE JVM — the 1g default OOMs, while a heap larger
+    than the box lets the JVM grow until the kernel kills it; the other
+    60% is left to the Python workers and the page cache. Only effective
+    at JVM launch (getOrCreate), inert when attaching to an existing
+    session."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2 ("max" when unlimited)
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(path) as fh:
+                mem = min(mem, int(fh.read().strip()))
+        except (OSError, ValueError):
+            pass
+    return f"{max(1, min(24, int(mem * 0.4 / 2**30)))}g"
+
+
 def get_spark(
     app_name: str = "big_data_medical_analysis_spark",
     master: str | None = None,
@@ -57,13 +74,14 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine profile.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
-    tests and bench share one knob. ``extra_conf`` wins over the profile.
+    tests and bench share one knob. The driver heap is ``_driver_heap()``.
+    ``extra_conf`` wins over the profile.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULTS)
+    conf = {**_DEFAULTS, "spark.driver.memory": _driver_heap()}
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -23,6 +23,11 @@ streaming surface at all; this pillar is mandated by the north star.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -476,16 +481,33 @@ def make_idempotent_batch_writer(out_dir: str):
     return _write
 
 
-def write_stream_idempotent(stream: DataFrame, out_dir: str, checkpoint: str):
-    """Start the stream through the idempotent foreachBatch writer; the
-    checkpoint directory carries the batch-id sequence across restarts
-    (checkpoint + idempotent sink = end-to-end exactly-once)."""
-    return (
-        stream.writeStream.foreachBatch(make_idempotent_batch_writer(out_dir))
+def start_foreach_batch(
+    stream: DataFrame, fn, checkpoint: str, available_now: bool = False
+):
+    """Start ``stream`` through the ``foreachBatch`` function ``fn`` — any
+    sink in this module: ``make_idempotent_batch_writer``, a state
+    merger, an index appender or the SemDeDup maintainer. The checkpoint
+    carries the source offsets and the batch-id sequence across restarts,
+    and Structured Streaming replays an uncommitted batch with the same
+    (data, batch_id): checkpoint + idempotent sink = end-to-end
+    exactly-once. Output mode "update" equals "append" for the
+    aggregation-free streams these sinks consume.
+
+    ``available_now=True`` is the operational BACKFILL shape
+    (Trigger.AvailableNow): drain everything currently in the source into
+    the sink, then terminate. A later start on the same checkpoint tails
+    only files the backfill did not consume; batch ids keep incrementing
+    across the boundary, so a ledger or batch-keyed output spans it
+    unchanged. This is how a maintainer is (re)started in production:
+    catch up the backlog, exit, run live."""
+    writer = (
+        stream.writeStream.foreachBatch(fn)
         .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+        .outputMode("update")
     )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -779,20 +801,22 @@ def user_type_breakdown_tws(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming HLL state maintenance (round 9): foreachBatch register merge
+# Exactly-once state sinks: one swap-merge commit for folded state tables,
+# one batch-keyed append for probe-then-append indexes
 # ---------------------------------------------------------------------------
 
+# Underscore prefix => Spark's parquet reader ignores it as a data file, so
+# the ledger can live INSIDE the state table dir and swap atomically with it.
+HIST_APPLIED_FILE = "_applied_batches.json"
 
-def _recover_state_swap(state_dir: str, cur_dir: str, is_complete) -> None:
-    """Entry-time recovery for the write-new-then-replace state swap,
-    shared by every foreachBatch state merger: if ``current`` is missing
-    (death between the two renames), promote the newest staging dir that
-    ``is_complete`` accepts, else restore the displaced ``old_*`` copy;
-    then delete every leftover ``staging_*``/``old_*`` so a stale dir
-    can't wedge the next swap on ENOTEMPTY."""
-    import glob
-    import os
-    import shutil
+
+def _recover_state_swap(state_dir: str, cur_dir: str) -> None:
+    """Entry-time recovery for the write-new-then-replace state swap: if
+    ``current`` is missing (death between the two renames), promote the
+    newest COMMITTED staging dir — parquet ``_SUCCESS`` and the ledger
+    both present — else restore the displaced ``old_*`` copy; then delete
+    every leftover ``staging_*``/``old_*`` so a stale dir can't wedge the
+    next swap on ENOTEMPTY."""
 
     # Sort by the NUMERIC batch-id suffix — lexicographic order misranks
     # ids >= 10 (staging_9 > staging_10), which could promote an older
@@ -806,7 +830,12 @@ def _recover_state_swap(state_dir: str, cur_dir: str, is_complete) -> None:
     stagings = sorted(glob.glob(os.path.join(state_dir, "staging_*")), key=_bid)
     olds = sorted(glob.glob(os.path.join(state_dir, "old_*")), key=_bid)
     if not os.path.exists(cur_dir):
-        done = [s for s in stagings if is_complete(s)]
+        done = [
+            s
+            for s in stagings
+            if os.path.exists(os.path.join(s, "_SUCCESS"))
+            and os.path.exists(os.path.join(s, HIST_APPLIED_FILE))
+        ]
         if done:
             os.replace(done[-1], cur_dir)
         elif olds:
@@ -822,15 +851,144 @@ def _commit_state_swap(
     """Second half of the swap: displace ``current`` to ``old_<id>``,
     promote the staging table, drop the displaced copy. Crash anywhere
     in here is healed by ``_recover_state_swap`` on the next merge."""
-    import os
-    import shutil
-
     old = os.path.join(state_dir, f"old_{batch_id}")
     if os.path.exists(cur_dir):
         os.replace(cur_dir, old)
     os.replace(staging, cur_dir)
     if os.path.exists(old):
         shutil.rmtree(old)
+
+
+def swap_merge(state_dir: str, fold):
+    """Exactly-once ``foreachBatch`` fold of each micro-batch into ONE
+    persisted parquet state table, ``<state_dir>/current``. The caller
+    supplies only ``fold(batch_df, cur) -> DataFrame``, the new state from
+    the batch and the current table (``None`` before the first commit);
+    this primitive owns the commit protocol:
+
+    1. ``_recover_state_swap`` heals whatever a crash left behind;
+    2. the applied-batch-id ledger (``HIST_APPLIED_FILE``, a JSON list
+       INSIDE the table dir) is read, and a batch already in it is skipped
+       wholesale — at-least-once redelivery never folds a batch twice,
+       whatever the fold's algebra;
+    3. the folded state is written to ``staging_<id>`` — never read+
+       overwrite one path in a single job, the lazy read would see its
+       own deletes;
+    4. the ledger is written into the staging dir LAST, so a staging dir
+       counts as committed only with BOTH parquet ``_SUCCESS`` and the
+       ledger: one that died between table and ledger holds the batch's
+       rows unrecorded, and promoting it would fold the batch twice on
+       redelivery;
+    5. ``_commit_state_swap`` displaces ``current`` and promotes the
+       staging dir — table and ledger commit together, so state can never
+       disagree with its ledger.
+
+    The two renames are not atomic; step 1 covers both crash windows on
+    the next call. The swap relies on POSIX ``os.replace`` on a local
+    filesystem: an object store has no atomic directory rename, and there
+    the commit needs a transactional table format (whose commit log
+    subsumes the ledger), which this module does not build.
+
+    Scale: per batch, the fold's own work plus one rewrite of the state
+    table (copy-on-write, the plain-parquet cost); the ledger grows by one
+    integer per batch."""
+    cur_dir = os.path.join(state_dir, "current")
+
+    def _merge(batch_df: DataFrame, batch_id: int) -> None:
+        _recover_state_swap(state_dir, cur_dir)
+        applied: list[int] = []
+        ledger = os.path.join(cur_dir, HIST_APPLIED_FILE)
+        if os.path.exists(ledger):
+            with open(ledger) as f:
+                applied = json.load(f)
+        if batch_id in applied:
+            return  # redelivered batch: already folded in, skip wholesale
+        cur = (
+            batch_df.sparkSession.read.parquet(cur_dir)
+            if os.path.exists(cur_dir)
+            else None
+        )
+        staging = os.path.join(state_dir, f"staging_{batch_id}")
+        fold(batch_df, cur).write.mode("overwrite").parquet(staging)
+        # write-then-rename: a death mid-dump must not leave a truncated
+        # ledger that recovery would take for a committed one
+        part = os.path.join(staging, f"_{HIST_APPLIED_FILE}.tmp")
+        with open(part, "w") as f:
+            json.dump(sorted(set(applied) | {batch_id}), f)
+        os.replace(part, os.path.join(staging, HIST_APPLIED_FILE))
+        _commit_state_swap(state_dir, cur_dir, staging, batch_id)
+
+    return _merge
+
+
+def _has_prior(dirpath: str, batch_id: int) -> bool:
+    """Whether ``dirpath`` holds an ``ingest_batch=<b>`` partition with
+    b < batch_id — prior batches only, so a replayed batch sees exactly
+    what its first attempt saw, never its own partial output."""
+    return any(
+        e.startswith("ingest_batch=") and int(e.split("=", 1)[1]) < batch_id
+        for e in (os.listdir(dirpath) if os.path.isdir(dirpath) else [])
+    )
+
+
+def _read_prior(spark: SparkSession, dirpath: str, batch_id: int) -> DataFrame:
+    """The ``ingest_batch < batch_id`` rows of a batch-keyed table (the
+    listing is refreshed: this session's own writes populated its file
+    status cache)."""
+    spark.catalog.refreshByPath(dirpath)
+    return spark.read.parquet(dirpath).filter(F.col("ingest_batch") < batch_id)
+
+
+def batch_keyed_append(
+    index_dir: str, matches_dir: str, bucket, part_col: str, probe
+):
+    """Exactly-once probe-then-append ``foreachBatch`` sink over an
+    append-only index. Each batch is bucketed ONCE
+    (``bucket(batch_df)``), PROBED against every prior batch's committed
+    index rows (``probe(banded, index) -> hits``), then APPENDED as its
+    own ``ingest_batch=<id>`` index partition, sub-partitioned by
+    ``part_col`` so probes prune to one directory per band or table; the
+    hits land in ``batch_id=<id>`` under ``matches_dir``. The same table
+    serves as index and accumulating state, so the NEXT batch probes
+    against everything before it. Before the first append the probe gets
+    an empty index of the banded schema and emits zero hits in its own
+    schema.
+
+    Exactly-once without a ledger: both outputs are per-batch overwrites
+    keyed by batch_id (the ``make_idempotent_batch_writer`` recipe), so a
+    replayed (data, batch_id) replaces its own partial output — no
+    double-appended index rows, no duplicated hits. The probe reads only
+    ``ingest_batch < batch_id`` partitions: a replayed batch whose append
+    already committed would otherwise probe its own rows (every row
+    self-matches) and write different hits than the first attempt.
+
+    Scale: per batch, O(batch) bucketing plus an equi-join against a
+    partition-pruned index read — the accumulated corpus is never
+    re-bucketed."""
+
+    def _append(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        banded = bucket(batch_df).persist()
+        try:
+            if _has_prior(index_dir, batch_id):
+                index = _read_prior(spark, index_dir, batch_id)
+            else:
+                index = spark.createDataFrame([], banded.schema)
+            probe(banded, index).write.mode("overwrite").parquet(
+                os.path.join(matches_dir, f"batch_id={batch_id}")
+            )
+            banded.write.mode("overwrite").partitionBy(part_col).parquet(
+                os.path.join(index_dir, f"ingest_batch={batch_id}")
+            )
+        finally:
+            banded.unpersist()
+
+    return _append
+
+
+# ---------------------------------------------------------------------------
+# Streaming HLL / histogram state maintenance (round 9): swap-merge folds
+# ---------------------------------------------------------------------------
 
 
 def make_hll_state_merger(state_dir: str):
@@ -841,95 +999,30 @@ def make_hll_state_merger(state_dir: str):
     merger maintains the same table incrementally as events arrive.
 
     Merge semantics are register-max (associative, commutative,
-    IDEMPOTENT — max(a, a) = a), which is what makes the fold safe under
-    Structured Streaming's at-least-once foreachBatch replay: a
-    redelivered batch re-maxes the same rhos and changes nothing, so
-    checkpoint + this merger is effectively-once WITHOUT the batch_id
-    bookkeeping the row-appending sink needs. The swap is
-    write-new-then-replace (never read+overwrite one path in a single
-    job — the lazy read would see its own deletes): new state lands in a
-    staging dir, then replaces the current table.
-
-    The two-rename swap is NOT atomic, so every merge begins with
-    RECOVERY over the swap's crash windows (review r9 — without this, a
-    crash between the renames lost the whole accumulated table on
-    replay, and a crash before the leftover cleanup wedged the stream on
-    ENOTEMPTY): if ``current`` is missing, promote the newest COMPLETE
-    staging table (parquet ``_SUCCESS`` marker — a half-written staging
-    is never trusted) or else restore the displaced ``old_*`` copy; then
-    delete every leftover ``staging_*``/``old_*``. Re-merging a batch
-    against recovered post-merge state is exactly the idempotent case.
+    IDEMPOTENT — max(a, a) = a): skipping a redelivered batch through the
+    ``swap_merge`` ledger gives the same state as re-maxing it, so the
+    ledger costs this fold nothing and keeps one completeness rule for
+    every state table.
 
     Scale: per-batch work is one (day, register) partial aggregate over
     the batch plus a merge against a table bounded by days × m registers
-    — KBs; the raw events are never re-read. The same shape runs on a
-    cluster with a transactional table format (commit replaces the
-    swap+recovery entirely).
+    — KBs; the raw events are never re-read.
     """
-    import os
-
     from big_data_medical_analysis_spark.operators.sketches import (
         daily_event_registers,
     )
 
-    cur_dir = os.path.join(state_dir, "current")
-
-    def _complete(staging: str) -> bool:
-        return os.path.exists(os.path.join(staging, "_SUCCESS"))
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_state_swap(state_dir, cur_dir, _complete)
+    def _fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         new = daily_event_registers(batch_df)
-        if os.path.exists(cur_dir):
-            cur = spark.read.parquet(cur_dir)
-            new = (
-                cur.unionByName(new)
-                .groupBy("day", "register")
-                .agg(F.max("rho").alias("rho"))
-            )
-        staging = os.path.join(state_dir, f"staging_{batch_id}")
-        new.write.mode("overwrite").parquet(staging)
-        _commit_state_swap(state_dir, cur_dir, staging, batch_id)
+        if cur is None:
+            return new
+        return (
+            cur.unionByName(new)
+            .groupBy("day", "register")
+            .agg(F.max("rho").alias("rho"))
+        )
 
-    return _merge
-
-
-def hll_state_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint: str,
-    available_now: bool = False,
-):
-    """Start the incremental HLL state maintenance stream: event files →
-    per-batch register build → idempotent register-max merge into the
-    persisted state table (checkpoint carries the source offsets).
-
-    ``available_now=True`` is the operational BACKFILL shape
-    (Trigger.AvailableNow): drain everything currently in ``input_dir``
-    into the state table, then terminate — a later start with the same
-    checkpoint tails only files the backfill didn't consume. This is how
-    the maintainer is (re)started in production: catch up the backlog,
-    exit, run live."""
-    writer = (
-        read_event_stream(spark, input_dir)
-        .writeStream.foreachBatch(make_hll_state_merger(state_dir))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# ---------------------------------------------------------------------------
-# Streaming histogram state maintenance (round 9): exactly-once bin-sum fold
-# ---------------------------------------------------------------------------
-
-# Underscore prefix => Spark's parquet reader ignores it as a data file, so
-# the ledger can live INSIDE the state table dir and swap atomically with it.
-HIST_APPLIED_FILE = "_applied_batches.json"
+    return swap_merge(state_dir, _fold)
 
 
 def make_hist_state_merger(state_dir: str):
@@ -939,95 +1032,30 @@ def make_hist_state_merger(state_dir: str):
     ``sketches.histogram_incremental_daily``'s state build, and the
     DELIBERATE CONTRAST to ``make_hll_state_merger``: bin-count SUM is
     associative and commutative but NOT idempotent (sum(a, a) = 2a), so
-    at-least-once foreachBatch replay WOULD double-count. Exactly-once
-    therefore needs batch_id bookkeeping: the set of applied batch ids is
-    a JSON ledger stored INSIDE the state table dir (underscore-prefixed,
-    so Spark's reader ignores it), and a batch already in the ledger is
-    skipped wholesale. Because ledger and table live in one directory,
-    the write-new-then-replace swap commits them ATOMICALLY together —
-    state can never disagree with its ledger.
-
-    Crash windows (same two-rename swap as the HLL merger, shared
-    ``_recover_state_swap``/``_commit_state_swap``): a staging table
-    counts as COMPLETE only when BOTH the parquet ``_SUCCESS`` marker and
-    the ledger file exist — the ledger is written LAST, so a staging that
-    died between parquet write and ledger write is never promoted (it
-    holds the batch's counts but doesn't record them; promoting it would
-    double-count on redelivery — exactly the failure the marker ordering
-    prevents).
+    at-least-once foreachBatch replay WOULD double-count without the
+    ``swap_merge`` ledger — here the ledger, not the merge math, is the
+    dedup.
 
     Scale: per-batch work is one map-side-combinable (day, bin) aggregate
     over the batch plus a merge against a table bounded by days × bins —
-    KBs; the ledger grows by one integer per batch (a production table
-    format's commit log subsumes both). Raw events are never re-read.
+    KBs. Raw events are never re-read.
     """
-    import json
-    import os
-
     from big_data_medical_analysis_spark.operators.sketches import (
         daily_value_histogram,
     )
 
-    cur_dir = os.path.join(state_dir, "current")
-
-    def _complete(staging: str) -> bool:
-        return os.path.exists(
-            os.path.join(staging, "_SUCCESS")
-        ) and os.path.exists(os.path.join(staging, HIST_APPLIED_FILE))
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_state_swap(state_dir, cur_dir, _complete)
-        applied: list[int] = []
-        ledger = os.path.join(cur_dir, HIST_APPLIED_FILE)
-        if os.path.exists(ledger):
-            with open(ledger) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return  # redelivered batch: already folded in, skip wholesale
+    def _fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         new = daily_value_histogram(batch_df)
-        if os.path.exists(cur_dir):
-            cur = spark.read.parquet(cur_dir).select("day", "bin", "cnt")
-            new = (
-                cur.unionByName(new)
-                .groupBy("day", "bin")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        staging = os.path.join(state_dir, f"staging_{batch_id}")
-        new.write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, HIST_APPLIED_FILE), "w") as f:
-            json.dump(sorted(set(applied) | {batch_id}), f)
-        _commit_state_swap(state_dir, cur_dir, staging, batch_id)
+        if cur is None:
+            return new
+        return (
+            cur.select("day", "bin", "cnt")
+            .unionByName(new)
+            .groupBy("day", "bin")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
 
-    return _merge
-
-
-def hist_state_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint: str,
-    available_now: bool = False,
-):
-    """Start the incremental histogram state maintenance stream: event
-    files → per-batch bin-count build → ledger-gated exactly-once sum
-    merge into the persisted state table (checkpoint carries the source
-    offsets; the ledger carries the applied batch ids).
-
-    ``available_now=True``: backfill shape (see ``hll_state_stream``).
-    The ledger spans the backfill/live boundary unchanged — batch ids
-    keep incrementing across restarts because they come from the shared
-    checkpoint, so a live redelivery of a backfill batch is still
-    skipped by the same ledger lookup."""
-    writer = (
-        read_event_stream(spark, input_dir)
-        .writeStream.foreachBatch(make_hist_state_merger(state_dir))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return swap_merge(state_dir, _fold)
 
 
 # ---------------------------------------------------------------------------
@@ -1054,113 +1082,39 @@ def make_pmh_index_appender(index_dir: str, matches_dir: str):
     """``foreachBatch`` function closing the loop
     ``minhash_incremental_probe`` documents: each ingest batch PROBES the
     persisted band index for duplicate candidates, then APPENDS its own
-    band rows — so the same table serves as index and accumulating state
-    and the NEXT batch dedups against everything before it.
-
-    Exactly-once on BOTH outputs without a ledger, because both are
-    per-batch overwrites keyed by batch_id (the
-    ``make_idempotent_batch_writer`` recipe): the batch's band rows land
-    in ``ingest_batch=<id>`` (sub-partitioned by band, so probes still
-    prune to one band directory per band), and its probe hits land in
-    ``batch_id=<id>`` under ``matches_dir``. Structured Streaming replays
-    a failed batch with the same (data, batch_id); each overwrite then
-    replaces its own partial output — no double-appended index rows, no
-    duplicated match rows. The probe read never sees half its OWN batch:
-    it runs before the append, against only prior batches' committed
-    directories.
-
-    The probe reads only ``ingest_batch < batch_id`` partitions: a
-    REPLAYED batch whose index append already committed would otherwise
-    probe its own rows (every doc self-matches) and write a different
-    matches file than the first attempt — partition-pruned replay
-    determinism, caught by the redelivery pytest.
+    band rows (``batch_keyed_append``: index partitions
+    ``ingest_batch=<id>/band=<b>``, hits ``batch_id=<id>`` with
+    (doc_id, n_index_matches, min_index_doc)).
 
     Batch-boundary semantics (same as the batch twin): probe-vs-index
     misses duplicates WITHIN the ingest batch; a batch-local self-dedup
     (batch-sized cost) runs beside it in production. Scale: per-batch
     cost is O(batch × bands) banding + a (band, bucket) equi-join against
-    a band-pruned index read — the accumulated corpus is never re-banded.
+    a band-pruned index read.
     """
-    import os
-
     from big_data_medical_analysis_spark.operators.dedup import (
         pmh_banded_buckets,
     )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        banded = pmh_banded_buckets(batch_df).persist()
-        try:
-            prior = [
-                e
-                for e in (
-                    os.listdir(index_dir) if os.path.isdir(index_dir) else []
-                )
-                if e.startswith("ingest_batch=")
-                and int(e.split("=", 1)[1]) < batch_id
-            ]
-            if prior:
-                index = (
-                    spark.read.parquet(index_dir)
-                    .filter(F.col("ingest_batch") < batch_id)
-                    .select(
-                        F.col("doc_id").alias("index_doc_id"),
-                        F.col("band").cast("int").alias("band"),
-                        "bucket",
-                    )
-                )
-                hits = (
-                    banded.withColumn("band", F.col("band").cast("int"))
-                    .join(index, ["band", "bucket"])
-                    .groupBy("doc_id")
-                    .agg(
-                        F.countDistinct("index_doc_id").alias(
-                            "n_index_matches"
-                        ),
-                        F.min("index_doc_id").alias("min_index_doc"),
-                    )
-                )
-            else:
-                hits = banded.select("doc_id").limit(0).select(
-                    "doc_id",
-                    F.lit(0).cast("long").alias("n_index_matches"),
-                    F.lit(None).cast("long").alias("min_index_doc"),
-                )
-            hits.write.mode("overwrite").parquet(
-                os.path.join(matches_dir, f"batch_id={batch_id}")
-            )
-            banded.write.mode("overwrite").partitionBy("band").parquet(
-                os.path.join(index_dir, f"ingest_batch={batch_id}")
-            )
-        finally:
-            banded.unpersist()
-
-    return _merge
-
-
-def pmh_index_stream(
-    spark: SparkSession,
-    input_dir: str,
-    index_dir: str,
-    matches_dir: str,
-    checkpoint: str,
-    available_now: bool = False,
-):
-    """Start the incremental MinHash-index ingest stream: document files →
-    per-batch probe against the accumulated band index → idempotent
-    append of the batch's own band rows. ``available_now=True`` is the
-    backfill shape (see ``hll_state_stream``)."""
-    writer = (
-        read_docs_stream(spark, input_dir)
-        .writeStream.foreachBatch(
-            make_pmh_index_appender(index_dir, matches_dir)
+    def _probe(banded: DataFrame, index: DataFrame) -> DataFrame:
+        index = index.select(
+            F.col("doc_id").alias("index_doc_id"),
+            F.col("band").cast("int").alias("band"),
+            "bucket",
         )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        return (
+            banded.withColumn("band", F.col("band").cast("int"))
+            .join(index, ["band", "bucket"])
+            .groupBy("doc_id")
+            .agg(
+                F.countDistinct("index_doc_id").alias("n_index_matches"),
+                F.min("index_doc_id").alias("min_index_doc"),
+            )
+        )
+
+    return batch_keyed_append(
+        index_dir, matches_dir, pmh_banded_buckets, "band", _probe
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -1188,11 +1142,8 @@ def make_ann_index_appender(index_dir: str, matches_dir: str):
     similarity pillar, closing the loop ``ann_incremental_probe``
     documents: each embedding batch buckets itself on the seeded sign-LSH
     family (one Arrow matmul pass), PROBES the accumulated (tbl, bucket)
-    index for collision candidates, then APPENDS its own bucket rows.
-    Same exactly-once/replay discipline: both outputs are per-batch
-    overwrites keyed by batch_id, and the probe reads only
-    ``ingest_batch < batch_id`` partitions so a replayed batch whose
-    append already committed never self-matches. Candidates carry
+    index for collision candidates, then APPENDS its own bucket rows
+    (``batch_keyed_append``, partitioned by tbl). Candidates carry
     (n_tables_hit, n_candidates, min_cand) per probing vector — the
     rerank-by-exact-cosine step happens downstream against the vector
     store by key join, exactly as in the batch twin.
@@ -1201,85 +1152,30 @@ def make_ann_index_appender(index_dir: str, matches_dir: str):
     that prunes to matching (tbl, bucket) partitions; the corpus is
     never re-bucketed. At 100 TB the index table is additionally
     bucketBy(bucket) so probes co-locate."""
-    import os
-
     from big_data_medical_analysis_spark.operators.similarity import (
         ann_lsh_buckets,
     )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        banded = ann_lsh_buckets(batch_df).persist()
-        try:
-            prior = [
-                e
-                for e in (
-                    os.listdir(index_dir) if os.path.isdir(index_dir) else []
-                )
-                if e.startswith("ingest_batch=")
-                and int(e.split("=", 1)[1]) < batch_id
-            ]
-            if prior:
-                index = (
-                    spark.read.parquet(index_dir)
-                    .filter(F.col("ingest_batch") < batch_id)
-                    .select(
-                        F.col("vec_id").alias("cand_id"),
-                        F.col("tbl").cast("int").alias("tbl"),
-                        "bucket",
-                    )
-                )
-                hits = (
-                    banded.withColumn("tbl", F.col("tbl").cast("int"))
-                    .join(index, ["tbl", "bucket"])
-                    .groupBy("vec_id")
-                    .agg(
-                        F.countDistinct("tbl").alias("n_tables_hit"),
-                        F.countDistinct("cand_id").alias("n_candidates"),
-                        F.min("cand_id").alias("min_cand"),
-                    )
-                )
-            else:
-                hits = banded.select("vec_id").limit(0).select(
-                    "vec_id",
-                    F.lit(0).cast("long").alias("n_tables_hit"),
-                    F.lit(0).cast("long").alias("n_candidates"),
-                    F.lit(None).cast("long").alias("min_cand"),
-                )
-            hits.write.mode("overwrite").parquet(
-                os.path.join(matches_dir, f"batch_id={batch_id}")
-            )
-            banded.write.mode("overwrite").partitionBy("tbl").parquet(
-                os.path.join(index_dir, f"ingest_batch={batch_id}")
-            )
-        finally:
-            banded.unpersist()
-
-    return _merge
-
-
-def ann_index_stream(
-    spark: SparkSession,
-    input_dir: str,
-    index_dir: str,
-    matches_dir: str,
-    checkpoint: str,
-    available_now: bool = False,
-):
-    """Start the incremental sign-LSH index ingest stream (see
-    ``make_ann_index_appender``); ``available_now=True`` is the backfill
-    shape."""
-    writer = (
-        read_embeddings_stream(spark, input_dir)
-        .writeStream.foreachBatch(
-            make_ann_index_appender(index_dir, matches_dir)
+    def _probe(banded: DataFrame, index: DataFrame) -> DataFrame:
+        index = index.select(
+            F.col("vec_id").alias("cand_id"),
+            F.col("tbl").cast("int").alias("tbl"),
+            "bucket",
         )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        return (
+            banded.withColumn("tbl", F.col("tbl").cast("int"))
+            .join(index, ["tbl", "bucket"])
+            .groupBy("vec_id")
+            .agg(
+                F.countDistinct("tbl").alias("n_tables_hit"),
+                F.countDistinct("cand_id").alias("n_candidates"),
+                F.min("cand_id").alias("min_cand"),
+            )
+        )
+
+    return batch_keyed_append(
+        index_dir, matches_dir, ann_lsh_buckets, "tbl", _probe
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -1309,111 +1205,53 @@ def make_adx_index_appender(index_dir: str, matches_dir: str):
     at ADX_BITS_MAX with candidates > target is the operational
     re-band signal, exactly as the batch query's docstring promises.
 
-    Exactly-once/replay discipline is the pmh recipe verbatim: both
-    outputs are per-batch ``mode=overwrite`` directories keyed by
-    batch_id, and the probe reads only ``ingest_batch < batch_id``
-    partitions, so a REPLAYED batch whose append already committed
-    derives the SAME serve_bits from the SAME prior rows (never its
-    own) and rewrites identical outputs. Scale: per-batch cost is
-    O(batch x L) banding + the masked equi-join whose expected
-    candidates per probe stay <= ADX_TARGET_CANDIDATES by the
+    Exactly-once/replay is ``batch_keyed_append``'s: the probe reads only
+    ``ingest_batch < batch_id`` partitions, so a REPLAYED batch whose
+    append already committed derives the SAME serve_bits from the SAME
+    prior rows (never its own) and rewrites identical outputs. Scale:
+    per-batch cost is O(batch x L) banding + the masked equi-join whose
+    expected candidates per probe stay <= ADX_TARGET_CANDIDATES by the
     serve-bits rule — probe work tracks the batch, flat in the index.
     """
-    import os
-
     from big_data_medical_analysis_spark.operators.similarity import (
         _adx_serve_bits,
         adx_lsh_buckets,
     )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        banded = adx_lsh_buckets(batch_df).persist()
-        try:
-            prior = [
-                e
-                for e in (
-                    os.listdir(index_dir) if os.path.isdir(index_dir) else []
-                )
-                if e.startswith("ingest_batch=")
-                and int(e.split("=", 1)[1]) < batch_id
-            ]
-            if prior:
-                index = (
-                    spark.read.parquet(index_dir)
-                    .filter(F.col("ingest_batch") < batch_id)
-                    .select(
-                        F.col("vec_id").alias("cand_id"),
-                        F.col("tbl").cast("int").alias("tbl"),
-                        "bucket",
-                    )
-                )
-                serve = _adx_serve_bits(index)
-                mask = F.expr("shiftleft(CAST(1 AS BIGINT), serve_bits)")
-                p = (
-                    banded.withColumn("tbl", F.col("tbl").cast("int"))
-                    .crossJoin(F.broadcast(serve))
-                    .select(
-                        "vec_id",
-                        "tbl",
-                        "serve_bits",
-                        (F.col("bucket") % mask).alias("mb"),
-                    )
-                )
-                i = index.crossJoin(F.broadcast(serve)).select(
-                    "cand_id", "tbl", (F.col("bucket") % mask).alias("mb")
-                )
-                hits = (
-                    p.join(i, ["tbl", "mb"])
-                    .groupBy("vec_id", "serve_bits")
-                    .agg(
-                        F.countDistinct("tbl").alias("n_tables_hit"),
-                        F.countDistinct("cand_id").alias("n_candidates"),
-                        F.min("cand_id").alias("min_cand"),
-                    )
-                )
-            else:
-                hits = banded.select("vec_id").limit(0).select(
-                    "vec_id",
-                    F.lit(0).cast("int").alias("serve_bits"),
-                    F.lit(0).cast("long").alias("n_tables_hit"),
-                    F.lit(0).cast("long").alias("n_candidates"),
-                    F.lit(None).cast("long").alias("min_cand"),
-                )
-            hits.write.mode("overwrite").parquet(
-                os.path.join(matches_dir, f"batch_id={batch_id}")
-            )
-            banded.write.mode("overwrite").partitionBy("tbl").parquet(
-                os.path.join(index_dir, f"ingest_batch={batch_id}")
-            )
-        finally:
-            banded.unpersist()
-
-    return _merge
-
-
-def adx_index_stream(
-    spark: SparkSession,
-    input_dir: str,
-    index_dir: str,
-    matches_dir: str,
-    checkpoint: str,
-    available_now: bool = False,
-):
-    """Start the incremental ADAPTIVE ANN index ingest stream (see
-    ``make_adx_index_appender``); ``available_now=True`` is the backfill
-    shape."""
-    writer = (
-        read_embeddings_stream(spark, input_dir)
-        .writeStream.foreachBatch(
-            make_adx_index_appender(index_dir, matches_dir)
+    def _probe(banded: DataFrame, index: DataFrame) -> DataFrame:
+        index = index.select(
+            F.col("vec_id").alias("cand_id"),
+            F.col("tbl").cast("int").alias("tbl"),
+            "bucket",
         )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
+        serve = _adx_serve_bits(index)
+        mask = F.expr("shiftleft(CAST(1 AS BIGINT), serve_bits)")
+        p = (
+            banded.withColumn("tbl", F.col("tbl").cast("int"))
+            .crossJoin(F.broadcast(serve))
+            .select(
+                "vec_id",
+                "tbl",
+                "serve_bits",
+                (F.col("bucket") % mask).alias("mb"),
+            )
+        )
+        i = index.crossJoin(F.broadcast(serve)).select(
+            "cand_id", "tbl", (F.col("bucket") % mask).alias("mb")
+        )
+        return (
+            p.join(i, ["tbl", "mb"])
+            .groupBy("vec_id", "serve_bits")
+            .agg(
+                F.countDistinct("tbl").alias("n_tables_hit"),
+                F.countDistinct("cand_id").alias("n_candidates"),
+                F.min("cand_id").alias("min_cand"),
+            )
+        )
+
+    return batch_keyed_append(
+        index_dir, matches_dir, adx_lsh_buckets, "tbl", _probe
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -1461,17 +1299,16 @@ def make_semdedup_maintainer(state_dir: str, stats_dir: str):
     `_semdedup_screen`'s keeper set bit-for-bit (no priors, same rank,
     same screen), which the pytest pins against the batch twin.
 
-    Exactly-once/replay is the pmh recipe verbatim: every output is a
-    per-batch ``mode=overwrite`` directory keyed by batch/ingest id, and
-    every read filters ``ingest_batch < batch_id`` — a replayed batch
-    sees the same priors, derives the same growth, and rewrites
-    identical outputs. Scale: per-batch cost is O(batch·kc) routing +
-    a cell-keyed equi-join against the (width-bounded-per-cell) fine
-    centroids + a (cell, fine)-keyed screen join against keepers of the
-    batch's own clusters only — work tracks the BATCH, never the
-    accumulated corpus (measured by tools/maintainer_probe.py)."""
-    import os
-
+    Exactly-once/replay is ``batch_keyed_append``'s recipe: every output
+    is a per-batch ``mode=overwrite`` directory keyed by batch/ingest id,
+    and every read of them keeps ``ingest_batch < batch_id`` (the shared
+    ``_has_prior``/``_read_prior``) — a replayed batch sees the same
+    priors, derives the same growth, and rewrites identical outputs.
+    Scale: per-batch cost is O(batch·kc) routing + a cell-keyed
+    equi-join against the (width-bounded-per-cell) fine centroids + a
+    (cell, fine)-keyed screen join against keepers of the batch's own
+    clusters only — work tracks the BATCH, never the accumulated corpus
+    (measured by tools/maintainer_probe.py)."""
     from pyspark.sql import Window as W
 
     from big_data_medical_analysis_spark.operators.similarity import (
@@ -1489,19 +1326,6 @@ def make_semdedup_maintainer(state_dir: str, stats_dir: str):
     counts_dir = os.path.join(state_dir, "counts")
     fines_dir = os.path.join(state_dir, "fines")
     keepers_dir = os.path.join(state_dir, "keepers")
-
-    def _has_prior(dirpath: str, batch_id: int) -> bool:
-        return any(
-            e.startswith("ingest_batch=")
-            and int(e.split("=", 1)[1]) < batch_id
-            for e in (os.listdir(dirpath) if os.path.isdir(dirpath) else [])
-        )
-
-    def _read_prior(spark, dirpath: str, batch_id: int) -> DataFrame:
-        spark.catalog.refreshByPath(dirpath)
-        return spark.read.parquet(dirpath).filter(
-            F.col("ingest_batch") < batch_id
-        )
 
     n2_of = lambda c: F.aggregate(  # noqa: E731 — local expr factory
         F.transform(c, lambda x: x * x),
@@ -1750,28 +1574,6 @@ def make_semdedup_maintainer(state_dir: str, stats_dir: str):
     return _merge
 
 
-def semdedup_index_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    stats_dir: str,
-    checkpoint: str,
-    available_now: bool = False,
-):
-    """Start the incremental SemDeDup index ingest stream (see
-    ``make_semdedup_maintainer``); ``available_now=True`` is the backfill
-    shape."""
-    writer = (
-        read_embeddings_stream(spark, input_dir)
-        .writeStream.foreachBatch(make_semdedup_maintainer(state_dir, stats_dir))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 # ---------------------------------------------------------------------------
 # Streaming SCD2 dimension maintenance (round 10): ledger-gated version merge
 # ---------------------------------------------------------------------------
@@ -1799,15 +1601,13 @@ def make_scd2_state_merger(state_dir: str):
        order);
     4. new state = closed history ∪ (re)closed opens ∪ survivor versions.
 
-    Version-appending is NOT idempotent, so exactly-once uses the same
-    applied-batch-id JSON ledger as ``make_hist_state_merger`` (ledger
-    written last inside the staging dir, swap commits table + ledger
-    atomically; ``_recover_state_swap`` covers the rename crash
-    windows). Input batches are assumed event-time ordered per user
-    across batches (the file source delivers files in arrival order; an
-    out-of-order feed needs a watermarked re-sort upstream, exactly as
-    a production CDC tailer provides) — the equality pytest proves the
-    incremental fold converges to the batch builder's table bit-for-bit.
+    Version-appending is NOT idempotent, so exactly-once rests on the
+    ``swap_merge`` ledger. Input batches are assumed event-time ordered
+    per user across batches (the file source delivers files in arrival
+    order; an out-of-order feed needs a watermarked re-sort upstream,
+    exactly as a production CDC tailer provides) — the equality pytest
+    proves the incremental fold converges to the batch builder's table
+    bit-for-bit.
 
     Scale: per-batch work is the batch's own key-partitioned windows
     plus a key-equi-join against ONLY the open versions (dimension-key
@@ -1816,9 +1616,6 @@ def make_scd2_state_merger(state_dir: str):
     becomes a MERGE commit and the closed-history rewrite disappears
     (copy-on-write is the plain-parquet cost of the demo, disclosed).
     """
-    import json
-    import os
-
     from pyspark.sql import Window as W
 
     from big_data_medical_analysis_spark.operators.etl import (
@@ -1827,105 +1624,54 @@ def make_scd2_state_merger(state_dir: str):
         scd2_versions,
     )
 
-    cur_dir = os.path.join(state_dir, "current")
-
-    def _complete(staging: str) -> bool:
-        return os.path.exists(
-            os.path.join(staging, "_SUCCESS")
-        ) and os.path.exists(os.path.join(staging, HIST_APPLIED_FILE))
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_state_swap(state_dir, cur_dir, _complete)
-        applied: list[int] = []
-        ledger = os.path.join(cur_dir, HIST_APPLIED_FILE)
-        if os.path.exists(ledger):
-            with open(ledger) as f:
-                applied = json.load(f)
-        if batch_id in applied:
-            return  # redelivered batch: versions already appended, skip
+    def _fold(batch_df: DataFrame, cur: DataFrame | None) -> DataFrame:
         log_b = scd2_event_log(batch_df)
-        if os.path.exists(cur_dir):
-            cur = spark.read.parquet(cur_dir).select(
-                "user_id", "status", "eff_from", "eff_to", "version"
+        if cur is None:
+            return scd2_versions(log_b)
+        cur = cur.select("user_id", "status", "eff_from", "eff_to", "version")
+        opens = cur.filter(F.col("eff_to").isNull()).select(
+            "user_id",
+            F.col("status").alias("open_status"),
+            F.col("eff_from").alias("open_from"),
+            F.col("version").alias("open_ver"),
+        )
+        wb = W.partitionBy("user_id").orderBy("es", "event_id")
+        coll = (
+            scd2_collapse(log_b)
+            .withColumn("rn", F.row_number().over(wb))
+            .join(opens, "user_id", "left")
+        )
+        surv = coll.filter(
+            ~(
+                (F.col("rn") == 1)
+                & F.col("open_status").isNotNull()
+                & (F.col("status") == F.col("open_status"))
             )
-            opens = cur.filter(F.col("eff_to").isNull()).select(
-                "user_id",
-                F.col("status").alias("open_status"),
-                F.col("eff_from").alias("open_from"),
-                F.col("version").alias("open_ver"),
-            )
-            wb = W.partitionBy("user_id").orderBy("es", "event_id")
-            coll = (
-                scd2_collapse(log_b)
-                .withColumn("rn", F.row_number().over(wb))
-                .join(opens, "user_id", "left")
-            )
-            surv = coll.filter(
-                ~(
-                    (F.col("rn") == 1)
-                    & F.col("open_status").isNotNull()
-                    & (F.col("status") == F.col("open_status"))
-                )
-            )
-            surv_v = surv.select(
-                "user_id",
-                "status",
-                F.col("es").alias("eff_from"),
-                F.lead("es").over(wb).alias("eff_to"),
-                (F.row_number().over(wb) + F.coalesce("open_ver", F.lit(0)))
-                .cast("long")
-                .alias("version"),
-            )
-            closes = surv.groupBy("user_id").agg(
-                F.min("es").alias("close_es")
-            )
-            opens_new = opens.join(closes, "user_id", "left").select(
-                "user_id",
-                F.col("open_status").alias("status"),
-                F.col("open_from").alias("eff_from"),
-                F.col("close_es").cast("long").alias("eff_to"),
-                F.col("open_ver").alias("version"),
-            )
-            new = (
-                cur.filter(F.col("eff_to").isNotNull())
-                .unionByName(opens_new)
-                .unionByName(surv_v)
-            )
-        else:
-            new = scd2_versions(log_b)
-        staging = os.path.join(state_dir, f"staging_{batch_id}")
-        new.write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, HIST_APPLIED_FILE), "w") as f:
-            json.dump(sorted(set(applied) | {batch_id}), f)
-        _commit_state_swap(state_dir, cur_dir, staging, batch_id)
+        )
+        surv_v = surv.select(
+            "user_id",
+            "status",
+            F.col("es").alias("eff_from"),
+            F.lead("es").over(wb).alias("eff_to"),
+            (F.row_number().over(wb) + F.coalesce("open_ver", F.lit(0)))
+            .cast("long")
+            .alias("version"),
+        )
+        closes = surv.groupBy("user_id").agg(F.min("es").alias("close_es"))
+        opens_new = opens.join(closes, "user_id", "left").select(
+            "user_id",
+            F.col("open_status").alias("status"),
+            F.col("open_from").alias("eff_from"),
+            F.col("close_es").cast("long").alias("eff_to"),
+            F.col("open_ver").alias("version"),
+        )
+        return (
+            cur.filter(F.col("eff_to").isNotNull())
+            .unionByName(opens_new)
+            .unionByName(surv_v)
+        )
 
-    return _merge
-
-
-def scd2_state_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint: str,
-    available_now: bool = False,
-):
-    """Start the incremental SCD2 dimension maintenance stream: change
-    event files → per-batch collapse + boundary merge → ledger-gated
-    exactly-once version append into the persisted dimension table.
-
-    ``available_now=True``: backfill shape (see ``hll_state_stream``) —
-    drain the backlog into the dimension, exit, run live later on the
-    same checkpoint; the ledger spans the boundary unchanged."""
-    writer = (
-        read_event_stream(spark, input_dir)
-        .writeStream.foreachBatch(make_scd2_state_merger(state_dir))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return swap_merge(state_dir, _fold)
 
 
 def pit_enrich_stream(events: DataFrame) -> DataFrame:

@@ -42,7 +42,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[8]", extra_conf={
+    s = get_spark("tests", extra_conf={
         "spark.sql.shuffle.partitions": "8",
     })
     yield s

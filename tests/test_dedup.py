@@ -196,6 +196,29 @@ def test_connected_components_hand_graph(spark):
     }
 
 
+def test_connected_components_concurrent_calls(spark):
+    """Two connected_components calls running at once in one driver
+    (threaded query execution) must each return their serial result:
+    each call owns its bucketed edge table, so neither can drop or
+    overwrite the other's mid-loop."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    graphs = [
+        [(i, i + 1) for i in range(1, 9)] + [(20, 21)],  # 8-round chain
+        [(i, i + 1) for i in range(100, 106)] + [(200, 201), (201, 202)],
+    ]
+
+    def labels(edges):
+        df = spark.createDataFrame(edges, "src long, dst long")
+        return sorted(tuple(r) for r in D.connected_components(df).collect())
+
+    serial = [labels(g) for g in graphs]
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [pool.submit(labels, g) for g in graphs]
+        concurrent = [f.result(timeout=600) for f in futures]
+    assert concurrent == serial
+
+
 def test_dedup_components_keeper_semantics(spark, sf_dir):
     """Every cluster has exactly one keeper (doc_id == cluster_id), the
     keeper is the min id, and sizes match the label multiplicity."""

@@ -88,16 +88,14 @@ def test_fused_queries_match_composed_chain(spark, sf_dir):
     # (ADVICE r16: double-sum merge order across partitions is
     # nondeterministic, so a value near a round-4 boundary could flake
     # under exact set equality).
-    fused = {
-        r.label: r for r in M.image_decode_stats(spark, sf_dir).collect()
-    }
+    fused_rows = M.image_decode_stats(spark, sf_dir).collect()
+    fused = {r.label: r for r in fused_rows}
     imgs = M.normalize_pipeline(M.synth_images(spark, sf_dir))
     stats = imgs.withColumn(
         "s", M.image_stats("norm_content", "height", "width")
     ).select("label", "s.p_min", "s.p_max", "s.p_mean")
-    composed = {
-        r.label: r
-        for r in stats.groupBy("label")
+    composed_rows = (
+        stats.groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_images"),
             F.min("p_min").alias("min_pixel"),
@@ -107,7 +105,10 @@ def test_fused_queries_match_composed_chain(spark, sf_dir):
             F.sum((F.col("p_max") == 255).cast("long")).alias("n_full_high"),
         )
         .collect()
-    }
+    )
+    composed = {r.label: r for r in composed_rows}
+    # one row per label on each side: a dict silently collapses duplicates
+    assert (len(fused), len(composed)) == (len(fused_rows), len(composed_rows))
     assert set(fused) == set(composed)
     for label, f in fused.items():
         c = composed[label]
@@ -116,13 +117,10 @@ def test_fused_queries_match_composed_chain(spark, sf_dir):
                                    c.n_full_low, c.n_full_high)
         assert f.avg_mean_pixel == pytest.approx(c.avg_mean_pixel, abs=1e-4)
 
-    fan = {
-        r.variant: r
-        for r in M.image_augment_fanout(spark, sf_dir).collect()
-    }
-    composed_fan = {
-        r.variant: r
-        for r in M.augment_pipeline(M.synth_images(spark, sf_dir))
+    fan_rows = M.image_augment_fanout(spark, sf_dir).collect()
+    fan = {r.variant: r for r in fan_rows}
+    composed_fan_rows = (
+        M.augment_pipeline(M.synth_images(spark, sf_dir))
         .groupBy("variant")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -130,7 +128,9 @@ def test_fused_queries_match_composed_chain(spark, sf_dir):
             F.avg(F.length("aug_content")).alias("avg_bytes"),
         )
         .collect()
-    }
+    )
+    composed_fan = {r.variant: r for r in composed_fan_rows}
+    assert (len(fan), len(composed_fan)) == (len(fan_rows), len(composed_fan_rows))
     assert set(fan) == set(composed_fan)
     for variant, f in fan.items():
         c = composed_fan[variant]
@@ -212,6 +212,35 @@ def test_jpeg_decoder_rejects_unsupported():
         J.decode_jpeg(bytes(blob))
     with pytest.raises(ValueError):
         J.decode_jpeg(J.encode_jpeg(img, 75)[:-10])  # truncated scan
+
+
+def test_jpeg_decoder_rejects_invalid_huffman_tables():
+    """A crafted DHT must fail with the codec's own error: three 1-bit
+    codes over-subscribe the code space (the LUT used to grow past its
+    65536 slots), and a DC category above 15 used to reach a negative
+    shift. Both are rejected while the table is built, and the LUT cache
+    stays bounded however many distinct tables a stream carries."""
+    from big_data_medical_analysis_spark.operators import jpeg_codec as J
+
+    blob = J.encode_jpeg(np.full((8, 8), 128, dtype=np.uint8), 75)
+    dht = blob.find(b"\xff\xc4")
+    end = dht + 2 + int.from_bytes(blob[dht + 2 : dht + 4], "big")
+    ac_table = blob[dht + 4 + 17 + len(J._DC_VALS) : end]
+
+    def with_dc_table(bits, vals):
+        payload = (bytes([0x00]) + bytes(bits + [0] * (16 - len(bits)))
+                   + bytes(vals) + ac_table)
+        seg = b"\xff\xc4" + (len(payload) + 2).to_bytes(2, "big") + payload
+        return blob[:dht] + seg + blob[end:]
+
+    with pytest.raises(ValueError, match="invalid Huffman table: over-subscribed"):
+        J.decode_jpeg(with_dc_table([3], [0, 1, 2]))
+    with pytest.raises(ValueError, match="invalid Huffman table: DC category 20"):
+        J.decode_jpeg(with_dc_table([1], [20]))
+
+    for n in range(J._LUT_CACHE_MAX + 8):
+        J._build_lut(False, [1] + [0] * 15, [n])
+    assert len(J._LUT_CACHE) <= J._LUT_CACHE_MAX
 
 
 def test_jpeg_byte_stuffing_roundtrips():

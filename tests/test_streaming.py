@@ -9,8 +9,10 @@ watermark advancement is scripted, not timing-dependent.
 
 from __future__ import annotations
 
+import collections
 import json
 import os
+import shutil
 import uuid
 
 import pytest
@@ -345,8 +347,10 @@ def test_foreachbatch_sink_is_idempotent(spark, tmp_path):
         (3, "2024-01-01 03:00:00.000000", 1, "click", 3.5),
     ]
     _write_events(indir, "a.json", rows_a)
-    q = SW.write_stream_idempotent(
-        SW.read_event_stream(spark, indir), outdir, ckpt
+    q = SW.start_foreach_batch(
+        SW.read_event_stream(spark, indir),
+        SW.make_idempotent_batch_writer(outdir),
+        ckpt,
     )
     try:
         q.processAllAvailable()
@@ -396,8 +400,10 @@ def test_foreachbatch_sink_is_idempotent(spark, tmp_path):
     crc = os.path.join(ckpt2, "commits", f".{last}.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    q2 = SW.write_stream_idempotent(
-        SW.read_event_stream(spark, indir), outdir, ckpt2
+    q2 = SW.start_foreach_batch(
+        SW.read_event_stream(spark, indir),
+        SW.make_idempotent_batch_writer(outdir),
+        ckpt2,
     )
     try:
         q2.processAllAvailable()
@@ -697,16 +703,10 @@ def test_tws_state_survives_query_restart_from_checkpoint(spark, tmp_path):
             # memory sink refuses checkpoint recovery; the repo's
             # idempotent foreachBatch parquet writer is the recoverable
             # sink (exactly-once via batch-id overwrite)
-            stream = SW.running_user_totals_tws(
-                SW.read_event_stream(spark, indir)
-            )
-            return (
-                stream.writeStream.foreachBatch(
-                    SW.make_idempotent_batch_writer(out_dir)
-                )
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .start()
+            return SW.start_foreach_batch(
+                SW.running_user_totals_tws(SW.read_event_stream(spark, indir)),
+                SW.make_idempotent_batch_writer(out_dir),
+                ckpt,
             )
 
         q1 = start()
@@ -809,9 +809,8 @@ def test_hll_state_stream_matches_batch_and_is_idempotent(spark, tmp_path):
     """The streaming register merger must converge to EXACTLY the state
     the batch builder computes over the same events (register-level
     equality — same recipe, sketches.daily_event_registers), and
-    re-merging a batch (at-least-once redelivery) must change nothing:
-    register-max is idempotent, which is the design claim that makes the
-    foreachBatch fold effectively-once without batch_id bookkeeping."""
+    re-merging a batch's events under a FRESH batch id (which the ledger
+    cannot skip) must change nothing: register-max is idempotent."""
     from big_data_medical_analysis_spark.operators.sketches import (
         daily_event_registers,
     )
@@ -824,7 +823,9 @@ def test_hll_state_stream_matches_batch_and_is_idempotent(spark, tmp_path):
     day2 = [(100 + i, f"2024-01-02 0{i % 9}:00:00.000000", i, "view", 2.0)
             for i in range(40)]
     _write_events(indir, "a.json", day1)
-    q = SW.hll_state_stream(spark, indir, state, ckpt)
+    q = SW.start_foreach_batch(
+        SW.read_event_stream(spark, indir), SW.make_hll_state_merger(state), ckpt
+    )
     try:
         q.processAllAvailable()
         _write_events(indir, "b.json", day2)
@@ -848,7 +849,7 @@ def test_hll_state_stream_matches_batch_and_is_idempotent(spark, tmp_path):
     }
     assert streamed == expected and len({d for d, _, _ in streamed}) == 2
 
-    # redelivery idempotence: re-merge day1 by hand with the same merger
+    # idempotent algebra: re-merge day1 under a fresh id with the same merger
     replay = spark.createDataFrame(
         [(eid, ts, uid, et, v) for eid, ts, uid, et, v in day1],
         "event_id long, ts_s string, user_id long, event_type string, value double",
@@ -860,62 +861,6 @@ def test_hll_state_stream_matches_batch_and_is_idempotent(spark, tmp_path):
         for r in spark.read.parquet(cur).collect()
     }
     assert again == streamed
-
-
-def test_hll_state_merger_recovers_both_crash_windows(spark, tmp_path):
-    """The two-rename state swap is not atomic; the merger's entry-time
-    recovery must survive BOTH crash windows (review r9): (a) death
-    between the renames — `current` gone, the displaced `old_*` copy and
-    a complete `staging_*` both on disk — must NOT lose accumulated
-    state on replay; (b) death after the swap but before leftover
-    cleanup — a stale non-empty `old_*` — must not wedge the next merge
-    with ENOTEMPTY."""
-    import shutil
-
-    state = str(tmp_path / "crash_state")
-    os.makedirs(state)
-
-    def ev_df(rows):
-        return spark.createDataFrame(
-            rows,
-            "event_id long, ts_s string, user_id long",
-        ).selectExpr("event_id", "CAST(ts_s AS TIMESTAMP) AS ts")
-
-    day1 = [(i, "2024-01-01 01:00:00", i) for i in range(30)]
-    day2 = [(100 + i, "2024-01-02 01:00:00", i) for i in range(30)]
-    merger = SW.make_hll_state_merger(state)
-    merger(ev_df(day1), 0)
-    cur = os.path.join(state, "current")
-    baseline = {
-        (r.day, r.register, r.rho) for r in spark.read.parquet(cur).collect()
-    }
-
-    # window (a): batch 1 wrote staging + displaced current, died pre-swap
-    merger(ev_df(day2), 1)  # produce the real post-batch-1 state first
-    spark.catalog.refreshByPath(cur)
-    full = {
-        (r.day, r.register, r.rho) for r in spark.read.parquet(cur).collect()
-    }
-    shutil.copytree(cur, os.path.join(state, "staging_1"))  # complete (_SUCCESS)
-    os.replace(cur, os.path.join(state, "old_1"))  # current is now MISSING
-    merger(ev_df(day2), 1)  # redelivery
-    spark.catalog.refreshByPath(cur)
-    recovered = {
-        (r.day, r.register, r.rho) for r in spark.read.parquet(cur).collect()
-    }
-    assert recovered == full  # nothing lost, replay idempotent
-    assert not os.path.exists(os.path.join(state, "old_1"))
-    assert not os.path.exists(os.path.join(state, "staging_1"))
-
-    # window (b): stale non-empty old_2 left behind after a completed swap
-    shutil.copytree(cur, os.path.join(state, "old_2"))
-    merger(ev_df(day2), 2)  # must not raise ENOTEMPTY
-    spark.catalog.refreshByPath(cur)
-    again = {
-        (r.day, r.register, r.rho) for r in spark.read.parquet(cur).collect()
-    }
-    assert again == full
-    assert baseline <= full  # day1 state never disappeared along the way
 
 
 def test_hist_state_stream_exactly_once_via_ledger(spark, tmp_path):
@@ -938,7 +883,9 @@ def test_hist_state_stream_exactly_once_via_ledger(spark, tmp_path):
     day2 = [(100 + i, f"2024-01-02 0{i % 9}:00:00.000000", i, "view", 2.0 + i)
             for i in range(40)]
     _write_events(indir, "a.json", day1)
-    q = SW.hist_state_stream(spark, indir, state, ckpt)
+    q = SW.start_foreach_batch(
+        SW.read_event_stream(spark, indir), SW.make_hist_state_merger(state), ckpt
+    )
     try:
         q.processAllAvailable()
         _write_events(indir, "b.json", day2)
@@ -997,70 +944,6 @@ def test_hist_state_stream_exactly_once_via_ledger(spark, tmp_path):
         assert doubled[(d, b)] == c * 2
 
 
-def test_hist_state_merger_half_committed_staging_never_promoted(
-    spark, tmp_path
-):
-    """The ledger is written LAST: a staging dir with parquet _SUCCESS but
-    NO ledger is a batch that died between state write and ledger write.
-    Recovery must NOT promote it (its counts are folded in but
-    unrecorded — promoting would double-count on redelivery); it must
-    fall back to the displaced old_* copy, and the redelivered batch
-    must then fold in exactly once. The two standard crash windows are
-    also exercised."""
-    import shutil
-
-    from big_data_medical_analysis_spark.operators.sketches import (
-        daily_value_histogram,
-    )
-
-    state = str(tmp_path / "hist_crash")
-    os.makedirs(state)
-
-    def ev_df(rows):
-        return spark.createDataFrame(
-            rows, "event_id long, ts_s string, value double"
-        ).selectExpr("event_id", "CAST(ts_s AS TIMESTAMP) AS ts", "value")
-
-    day1 = [(i, "2024-01-01 01:00:00", 1.0 + i) for i in range(30)]
-    day2 = [(100 + i, "2024-01-02 01:00:00", 2.0 + i) for i in range(30)]
-    merger = SW.make_hist_state_merger(state)
-    merger(ev_df(day1), 0)
-    cur = os.path.join(state, "current")
-    baseline = {
-        (r.day, r.bin, r.cnt) for r in spark.read.parquet(cur).collect()
-    }
-
-    # half-committed staging: parquet done, ledger missing
-    merger(ev_df(day2), 1)  # produce the true post-batch-1 state
-    spark.catalog.refreshByPath(cur)
-    full = {(r.day, r.bin, r.cnt) for r in spark.read.parquet(cur).collect()}
-    half = os.path.join(state, "staging_1")
-    shutil.copytree(cur, half)
-    os.remove(os.path.join(half, SW.HIST_APPLIED_FILE))  # died pre-ledger
-    os.replace(cur, os.path.join(state, "old_1"))  # current missing
-    merger(ev_df(day2), 1)  # redelivery
-    spark.catalog.refreshByPath(cur)
-    recovered = {
-        (r.day, r.bin, r.cnt) for r in spark.read.parquet(cur).collect()
-    }
-    # old_1 (the pre-batch-1 state) was restored, then batch 1 re-applied
-    # exactly once — equal to the true post-batch-1 state, not doubled
-    assert recovered == full
-    assert not os.path.exists(os.path.join(state, "old_1"))
-    assert not os.path.exists(half)
-
-    # complete staging (ledger present) IS promoted, and the ledger then
-    # skips the redelivered batch
-    shutil.copytree(cur, os.path.join(state, "staging_2"))
-    os.replace(cur, os.path.join(state, "old_2"))
-    merger(ev_df(day2), 1)  # already in promoted ledger: no-op fold
-    spark.catalog.refreshByPath(cur)
-    assert {
-        (r.day, r.bin, r.cnt) for r in spark.read.parquet(cur).collect()
-    } == full
-    assert baseline <= full
-
-
 def test_backfill_then_tail_into_same_state(spark, tmp_path):
     """The operational restart shape (VERDICT r9 task 5): a
     Trigger.AvailableNow run drains the BACKLOG into the persisted state
@@ -1088,14 +971,17 @@ def test_backfill_then_tail_into_same_state(spark, tmp_path):
     _write_events(indir, "b.json", backlog2)
 
     cases = {
-        "hll": (SW.hll_state_stream, str(tmp_path / "hll_state"),
+        "hll": (SW.make_hll_state_merger, str(tmp_path / "hll_state"),
                 str(tmp_path / "hll_ckpt")),
-        "hist": (SW.hist_state_stream, str(tmp_path / "hist_state"),
+        "hist": (SW.make_hist_state_merger, str(tmp_path / "hist_state"),
                  str(tmp_path / "hist_ckpt")),
     }
     # Phase 1: backfill — AvailableNow drains both files, then terminates
-    for _, (starter, state, ckpt) in cases.items():
-        q = starter(spark, indir, state, ckpt, available_now=True)
+    for _, (make, state, ckpt) in cases.items():
+        q = SW.start_foreach_batch(
+            SW.read_event_stream(spark, indir), make(state), ckpt,
+            available_now=True,
+        )
         assert q.awaitTermination(120), "availableNow run must terminate"
 
     hist_state = cases["hist"][1]
@@ -1108,8 +994,10 @@ def test_backfill_then_tail_into_same_state(spark, tmp_path):
 
     # Phase 2: live tail — same checkpoint+state, only the new file lands
     _write_events(indir, "c.json", live)
-    for _, (starter, state, ckpt) in cases.items():
-        q = starter(spark, indir, state, ckpt)
+    for _, (make, state, ckpt) in cases.items():
+        q = SW.start_foreach_batch(
+            SW.read_event_stream(spark, indir), make(state), ckpt
+        )
         try:
             q.processAllAvailable()
         finally:
@@ -1177,9 +1065,8 @@ def test_pmh_index_stream_probe_then_append(spark, tmp_path):
     builds the index (no prior index to probe), batch 2 probes batch 1's
     rows THEN appends its own — so the accumulated index after both
     batches equals the batch-built index over all docs, batch 2's probe
-    hits equal the batch twin's probe-vs-index join, and redelivering a
-    batch (same batch_id) changes neither output (per-batch overwrite
-    idempotence)."""
+    hits equal the batch twin's probe-vs-index join (redelivery is
+    covered by test_sink_crash_matrix)."""
     from big_data_medical_analysis_spark.operators.dedup import (
         pmh_banded_buckets,
     )
@@ -1198,13 +1085,19 @@ def test_pmh_index_stream_probe_then_append(spark, tmp_path):
           (11, "totally different words entirely here", "s3")]
 
     _write_docs(indir, "a.json", b1)
-    q = SW.pmh_index_stream(
-        spark, indir, index_dir, matches_dir, ckpt, available_now=True
+    q = SW.start_foreach_batch(
+        SW.read_docs_stream(spark, indir),
+        SW.make_pmh_index_appender(index_dir, matches_dir),
+        ckpt,
+        available_now=True,
     )
     assert q.awaitTermination(120)
     _write_docs(indir, "b.json", b2)
-    q = SW.pmh_index_stream(
-        spark, indir, index_dir, matches_dir, ckpt, available_now=True
+    q = SW.start_foreach_batch(
+        SW.read_docs_stream(spark, indir),
+        SW.make_pmh_index_appender(index_dir, matches_dir),
+        ckpt,
+        available_now=True,
     )
     assert q.awaitTermination(120)
 
@@ -1249,22 +1142,6 @@ def test_pmh_index_stream_probe_then_append(spark, tmp_path):
     assert got_hits == expected_hits
     assert any(d == 10 and m == 1 for d, _, m in got_hits)  # planted dup found
 
-    # redelivery: re-run batch id 1 with batch 2's data by hand — both
-    # outputs must be byte-identical afterwards (overwrite, not append)
-    SW.make_pmh_index_appender(index_dir, matches_dir)(docs_df(b2), 1)
-    spark.catalog.refreshByPath(index_dir)
-    again_index = {
-        (r.doc_id, int(r.band), r.bucket)
-        for r in spark.read.parquet(index_dir)
-        .select("doc_id", "band", "bucket").collect()
-    }
-    assert again_index == streamed_index
-    spark.catalog.refreshByPath(matches_dir)
-    again_hits = {
-        (r.doc_id, r.n_index_matches, r.min_index_doc)
-        for r in spark.read.parquet(matches_dir).collect()
-    }
-    assert again_hits == got_hits
 
 
 def test_dynamic_gap_sessions_match_session_window_gap_expr(spark, sf_dir):
@@ -1330,9 +1207,9 @@ def test_dynamic_gap_sessions_match_session_window_gap_expr(spark, sf_dir):
 def test_ann_index_stream_probe_then_append(spark, tmp_path):
     """Sign-LSH twin of the MinHash ingest loop: batch 2 contains an
     exact copy of a batch-1 vector (identical buckets in every table ⇒
-    n_tables_hit = ANN_LSH_TABLES), the accumulated index equals the
-    batch-built buckets over all vectors, and redelivery with an
-    already-committed append changes neither output."""
+    n_tables_hit = ANN_LSH_TABLES) and the accumulated index equals the
+    batch-built buckets over all vectors (redelivery is covered by
+    test_sink_crash_matrix)."""
     import random
 
     from big_data_medical_analysis_spark.operators import similarity as S
@@ -1365,13 +1242,19 @@ def test_ann_index_stream_probe_then_append(spark, tmp_path):
         )
 
     write_batch("a.json", b1)
-    q = SW.ann_index_stream(
-        spark, indir, index_dir, matches_dir, ckpt, available_now=True
+    q = SW.start_foreach_batch(
+        SW.read_embeddings_stream(spark, indir),
+        SW.make_ann_index_appender(index_dir, matches_dir),
+        ckpt,
+        available_now=True,
     )
     assert q.awaitTermination(120)
     write_batch("b.json", b2)
-    q = SW.ann_index_stream(
-        spark, indir, index_dir, matches_dir, ckpt, available_now=True
+    q = SW.start_foreach_batch(
+        SW.read_embeddings_stream(spark, indir),
+        SW.make_ann_index_appender(index_dir, matches_dir),
+        ckpt,
+        available_now=True,
     )
     assert q.awaitTermination(120)
 
@@ -1395,21 +1278,6 @@ def test_ann_index_stream_probe_then_append(spark, tmp_path):
     # the planted exact copy collides in EVERY table with its twin
     assert (10, S.ANN_LSH_TABLES, 1) in hits
 
-    # redelivery idempotence (append already committed)
-    SW.make_ann_index_appender(index_dir, matches_dir)(emb_df(b2), 1)
-    spark.catalog.refreshByPath(index_dir)
-    again = {
-        (r.vec_id, int(r.tbl), r.bucket)
-        for r in spark.read.parquet(index_dir)
-        .select("vec_id", "tbl", "bucket").collect()
-    }
-    assert again == streamed
-    spark.catalog.refreshByPath(matches_dir)
-    hits_again = {
-        (r.vec_id, r.n_tables_hit, r.min_cand)
-        for r in spark.read.parquet(matches_dir).collect()
-    }
-    assert hits_again == hits
 
 
 def test_adx_index_stream_serve_bits_deepens_mid_stream(spark, tmp_path):
@@ -1420,10 +1288,10 @@ def test_adx_index_stream_serve_bits_deepens_mid_stream(spark, tmp_path):
     (> 1024 -> serve_bits 5). Asserts (a) the accumulated index equals
     the batch banding of all vectors at max resolution, (b) each
     batch's matches carry the geometry it was served at, with the
-    boundary crossing visible, (c) every batch's hit rows equal an
+    boundary crossing visible, and (c) every batch's hit rows equal an
     independent batch-twin recompute (band prior vectors, derive
-    serve_bits, masked equi-join — the ann_adaptive_serve shape), and
-    (d) redelivery of an already-committed batch changes nothing."""
+    serve_bits, masked equi-join — the ann_adaptive_serve shape).
+    Redelivery is covered by test_sink_crash_matrix."""
     import random
 
     from big_data_medical_analysis_spark.operators import similarity as S
@@ -1459,8 +1327,11 @@ def test_adx_index_stream_serve_bits_deepens_mid_stream(spark, tmp_path):
 
     for name, rows in (("a.json", b0), ("b.json", b1), ("c.json", b2)):
         write_batch(name, rows)
-        q = SW.adx_index_stream(
-            spark, indir, index_dir, matches_dir, ckpt, available_now=True
+        q = SW.start_foreach_batch(
+            SW.read_embeddings_stream(spark, indir),
+            SW.make_adx_index_appender(index_dir, matches_dir),
+            ckpt,
+            available_now=True,
         )
         assert q.awaitTermination(180)
 
@@ -1529,17 +1400,6 @@ def test_adx_index_stream_serve_bits_deepens_mid_stream(spark, tmp_path):
     assert m1 == twin_hits(b0, b1)
     assert m2 == twin_hits(b0 + b1, b2)
 
-    # redelivery idempotence: the committed batch 1 replays to the same
-    # serve_bits (derived from the SAME prior-only rows) and same outputs
-    SW.make_adx_index_appender(index_dir, matches_dir)(emb_df(b1), 1)
-    assert match_rows(1) == m1
-    spark.catalog.refreshByPath(index_dir)
-    again = {
-        (r.vec_id, int(r.tbl), r.bucket)
-        for r in spark.read.parquet(index_dir)
-        .select("vec_id", "tbl", "bucket").collect()
-    }
-    assert again == streamed
 
 
 def test_scd2_state_stream_matches_batch_across_noop_seams(spark, tmp_path):
@@ -1581,10 +1441,16 @@ def test_scd2_state_stream_matches_batch_across_noop_seams(spark, tmp_path):
     ]
     _write_events(indir, "a.json", batch_a)
     _write_events(indir, "b.json", batch_b)
-    q = SW.scd2_state_stream(spark, indir, state, ckpt, available_now=True)
+    q = SW.start_foreach_batch(
+        SW.read_event_stream(spark, indir), SW.make_scd2_state_merger(state),
+        ckpt, available_now=True,
+    )
     assert q.awaitTermination(120), "availableNow run must terminate"
     _write_events(indir, "c.json", batch_c)
-    q = SW.scd2_state_stream(spark, indir, state, ckpt)
+    q = SW.start_foreach_batch(
+        SW.read_event_stream(spark, indir), SW.make_scd2_state_merger(state),
+        ckpt,
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -1927,9 +1793,9 @@ def test_semdedup_index_stream_kf_growth_mid_stream(spark, tmp_path):
         and APPENDS fine (0, 1) seeded from its first vector, which then
         assigns to itself and is kept (no cluster-mates), while its
         batch-mate lands in fine 0 and is pruned by the bootstrap
-        keepers;
-    (d) redelivery of a committed batch rewrites identical outputs (all
-        reads filter ingest_batch < batch_id)."""
+        keepers.
+
+    Redelivery and crash recovery are covered by test_sink_crash_matrix."""
     from big_data_medical_analysis_spark.operators import similarity as S
 
     M = 1_000_000
@@ -1970,16 +1836,13 @@ def test_semdedup_index_stream_kf_growth_mid_stream(spark, tmp_path):
         os.replace(os.path.join(indir, name + ".tmp"),
                    os.path.join(indir, name))
 
-    def emb_df(rows):
-        return spark.createDataFrame(
-            [(v, [float(x) for x in e]) for v, e in rows],
-            "vec_id long, embedding array<double>",
-        )
-
     for name, rows in (("a.json", b0), ("b.json", b1), ("c.json", b2)):
         write_batch(name, rows)
-        q = SW.semdedup_index_stream(
-            spark, indir, state_dir, stats_dir, ckpt, available_now=True
+        q = SW.start_foreach_batch(
+            SW.read_embeddings_stream(spark, indir),
+            SW.make_semdedup_maintainer(state_dir, stats_dir),
+            ckpt,
+            available_now=True,
         )
         assert q.awaitTermination(300)
 
@@ -2033,73 +1896,211 @@ def test_semdedup_index_stream_kf_growth_mid_stream(spark, tmp_path):
     s2 = stats(2)
     assert (s2.n_routed, s2.n_pruned_prior, s2.n_kept) == (2, 1, 1)
 
-    # (d) redelivery of committed batch 1: identical outputs
-    before = (keepers(), fines())
-    SW.make_semdedup_maintainer(state_dir, stats_dir)(emb_df(b1), 1)
-    assert (keepers(), fines()) == before
-    s1_again = stats(1)
-    assert (s1_again.n_routed, s1_again.n_pruned_prior, s1_again.n_kept) == (
-        s1.n_routed, s1.n_pruned_prior, s1.n_kept
-    )
+
+# ---------------------------------------------------------------------------
+# Fault-injection matrix over every exactly-once foreachBatch sink
+# ---------------------------------------------------------------------------
 
 
-def test_semdedup_maintainer_crash_window_recovery(spark, tmp_path):
-    """The maintainer's commit marker is the COUNTS partition (written
-    after keepers/fines; bootstrap detection and every prior-read key on
-    it), so the two real crash windows are: (1) bootstrap crashed after
-    the codebook + keepers/fines writes but before counts — replay must
-    re-run the BOOTSTRAP path (no prior counts partition) and overwrite
-    deterministically; (2) an incremental batch crashed after keepers
-    but before counts — replay must take the non-bootstrap path off
-    batch 0's counts, see only `ingest_batch < 1` priors (its own
-    orphaned partition is filtered), and rewrite identical outputs.
-    Both recovered states must equal a clean end-to-end run bit-for-bit."""
-    import shutil
+class _Crash(Exception):
+    """A sink killed between two of its durable steps."""
 
-    M = 1.0
-    b0 = [(i, [M if j == i % 8 else 0.0 for j in range(8)]) for i in range(8)]
-    b1 = [(100, [M, 0, 0, 0, 2 * M, 0, 0, 0]),
-          (101, [0, M, 0, 0, 0, 2 * M, 0, 0])]
 
-    def emb_df(rows):
-        return spark.createDataFrame(
-            [(v, [float(x) for x in e]) for v, e in rows],
-            "vec_id long, embedding array<double>",
-        )
+@contextlib.contextmanager
+def _durable_steps(monkeypatch, crash_at=None):
+    """Record every durable step a sink takes — parquet writes, ledger
+    dumps, renames, deletes — and raise ``_Crash`` in place of step
+    ``crash_at`` (1-based), so exactly the earlier steps are on disk."""
+    from pyspark.sql.readwriter import DataFrameWriter
 
-    def run(tag, crash):
-        state = str(tmp_path / f"{tag}_state")
-        stats = str(tmp_path / f"{tag}_stats")
-        merge = SW.make_semdedup_maintainer(state, stats)
-        merge(emb_df(b0), 0)
-        if crash == "bootstrap":
-            # crash window 1: counts (the commit marker) vanishes after
-            # the bootstrap's other writes landed
-            shutil.rmtree(os.path.join(state, "counts", "ingest_batch=0"))
-            merge(emb_df(b0), 0)  # replay re-bootstraps
-        merge(emb_df(b1), 1)
-        if crash == "batch":
-            shutil.rmtree(os.path.join(state, "counts", "ingest_batch=1"))
-            merge(emb_df(b1), 1)  # replay off batch 0's committed counts
-        out = {}
-        for sub in ("keepers", "counts", "fines"):
-            spark.catalog.refreshByPath(os.path.join(state, sub))
-            df = spark.read.parquet(os.path.join(state, sub))
-            cols = sorted(c for c in df.columns if c not in ("c", "v"))
-            out[sub] = {tuple(r) for r in df.select(*cols).collect()}
-        return out
+    steps: list[str] = []
 
-    clean = run("clean", crash=None)
-    assert run("cb", crash="bootstrap") == clean
-    assert run("ib", crash="batch") == clean
-    # sanity: the clean baseline has committed state at BOTH batch ids —
-    # an accidentally empty baseline would make the equalities vacuous
-    assert clean["keepers"]
-    spark.catalog.refreshByPath(str(tmp_path / "clean_state" / "counts"))
-    batches = {
-        r.ingest_batch
-        for r in spark.read.parquet(
-            str(tmp_path / "clean_state" / "counts")
-        ).collect()
-    }
-    assert batches == {0, 1}
+    def hook(name, fn):
+        def step(*args, **kwargs):
+            steps.append(name)
+            if len(steps) == crash_at:
+                raise _Crash(f"killed before step {crash_at} ({name})")
+            return fn(*args, **kwargs)
+
+        return step
+
+    with monkeypatch.context() as m:
+        for owner, name in (
+            (DataFrameWriter, "parquet"),
+            (json, "dump"),
+            (os, "replace"),
+            (shutil, "rmtree"),
+        ):
+            m.setattr(owner, name, hook(name, getattr(owner, name)))
+        yield steps
+
+
+def _sink_state(root) -> dict:
+    """Everything a sink left under ``root``: each committed parquet table
+    (a dir holding ``_SUCCESS``, partition subdirs included) as a row
+    multiset, each JSON ledger's content, and every other file or empty
+    dir by path — so a stray staging/old copy or partial table shows.
+    Tables are read with pyarrow: no Spark job per snapshot."""
+    import pyarrow.parquet as pq
+
+    out: dict = {}
+    for d, dirs, files in os.walk(root):
+        rel = os.path.relpath(d, root)
+        for f in files:
+            if f.endswith(".json"):
+                with open(os.path.join(d, f)) as fh:
+                    out[os.path.join(rel, f)] = json.load(fh)
+        if "_SUCCESS" in files:
+            out[rel] = collections.Counter(
+                tuple(
+                    (k, tuple(v) if isinstance(v, list) else v)
+                    for k, v in sorted(r.items())
+                )
+                for r in pq.read_table(d).to_pylist()
+            )
+            dirs[:] = []
+        elif not dirs and not files:
+            out[rel] = "empty dir"
+        else:
+            out.update(
+                (os.path.join(rel, f), "file")
+                for f in files
+                if not f.startswith(".") and not f.endswith(".json")
+            )
+    return out
+
+
+def _sink_batches(spark, kind: str) -> list:
+    """Three small input batches per sink input kind; later batches repeat
+    earlier rows, so every probe and fold has something to hit."""
+    import random
+
+    if kind == "events":
+        return [
+            spark.createDataFrame(
+                [
+                    (100 * b + i, f"2024-01-0{b + 1} 0{i % 9}:00:00", i % 5,
+                     ("click", "view", "error")[(i + b) % 3], 1.0 + i)
+                    for i in range(30)
+                ],
+                "event_id long, ts_s string, user_id long, event_type string,"
+                " value double",
+            ).selectExpr(
+                "event_id", "CAST(ts_s AS TIMESTAMP) AS ts", "user_id",
+                "event_type", "value",
+            )
+            for b in range(3)
+        ]
+    if kind == "docs":
+        t = ["alpha beta gamma delta epsilon", "one two three four five six",
+             "red green blue yellow purple",
+             "totally different words entirely here"]
+        return [
+            spark.createDataFrame(rows, "doc_id long, text string, source string")
+            for rows in (
+                [(1, t[0], "s1"), (2, t[1], "s1"), (3, t[2], "s2")],
+                [(10, t[0], "s3"), (11, t[3], "s3")],
+                [(20, t[1], "s4"), (21, t[3], "s4")],
+            )
+        ]
+    if kind == "emb64":
+        rng = random.Random(5)
+
+        def vec():
+            return [rng.uniform(-1, 1) for _ in range(64)]
+
+        b0 = [(i, vec()) for i in range(6)]
+        b1 = [(10, b0[0][1]), (11, vec()), (12, vec())]
+        batches = [b0, b1, [(20, b1[1][1]), (21, vec())]]
+    else:  # "emb8": axis plant for the SemDeDup cell/fine screen
+        v100 = [1.0, 0.0, 0.0, 0.0, 2.0, 0.0, 0.0, 0.0]
+        batches = [
+            [(i, [float(j == i) for j in range(8)]) for i in range(8)],
+            [(100, v100), (101, [0.0, 1.0, 0.0, 0.0, 0.0, 2.0, 0.0, 0.0])],
+            [(200, [0.0, 0.0, 1.0, 0.0, 0.0, 0.0, 2.0, 0.0]), (201, v100)],
+        ]
+    return [
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        for rows in batches
+    ]
+
+
+_SINKS = {
+    "hll": ("events", SW.make_hll_state_merger),
+    "hist": ("events", SW.make_hist_state_merger),
+    "scd2": ("events", SW.make_scd2_state_merger),
+    "pmh": ("docs", lambda r: SW.make_pmh_index_appender(
+        os.path.join(r, "index"), os.path.join(r, "matches"))),
+    "ann": ("emb64", lambda r: SW.make_ann_index_appender(
+        os.path.join(r, "index"), os.path.join(r, "matches"))),
+    "adx": ("emb64", lambda r: SW.make_adx_index_appender(
+        os.path.join(r, "index"), os.path.join(r, "matches"))),
+    "semdedup": ("emb8", lambda r: SW.make_semdedup_maintainer(
+        os.path.join(r, "state"), os.path.join(r, "stats"))),
+}
+
+
+@pytest.mark.parametrize("sink", list(_SINKS))
+def test_sink_crash_matrix(spark, tmp_path, monkeypatch, sink):
+    """Every exactly-once foreachBatch sink, killed before each of its
+    durable steps (parquet write, ledger dump, rename, delete) in the
+    bootstrap batch and in a later batch, then replayed with the same
+    (data, batch_id), must leave EXACTLY the state of a clean run: the
+    same committed tables, the same ledger, no leftover dir. Killed after
+    its last step is the redelivery of a committed batch whose commit the
+    checkpoint never recorded; a committed batch redelivered after a
+    LATER batch committed must change nothing either (every read is
+    prior-batch only).
+
+    The swap mergers also recover from leftover states no single crash
+    leaves: a missing ``current`` with ``staging_9`` and ``staging_10``
+    (the numeric sort must promote staging_10; lexicographic order would
+    pick staging_9), and a staging dir whose table landed but whose
+    ledger did not (never promoted: the displaced old copy is restored
+    and the batch folded once)."""
+    kind, make = _SINKS[sink]
+    batches = _sink_batches(spark, kind)
+
+    def run(root, b, crash_at=None):
+        fn = make(str(root))
+        with _durable_steps(monkeypatch, crash_at) as steps, \
+                contextlib.suppress(_Crash):
+            fn(batches[b], b)
+        return steps
+
+    def replayed(root, b):
+        run(root, b)
+        return _sink_state(str(root))
+
+    clean, n_steps = [], []
+    for b in range(len(batches)):
+        n_steps.append(len(run(tmp_path / "clean", b)))
+        shutil.copytree(tmp_path / "clean", tmp_path / f"clean_{b}")
+        clean.append(_sink_state(str(tmp_path / "clean")))
+    assert clean[0] and clean[0] != clean[1] != clean[2]  # every batch counts
+
+    for b in (0, 1):
+        for k in range(1, n_steps[b] + 2):
+            case = tmp_path / f"b{b}_k{k}"
+            if b:
+                shutil.copytree(tmp_path / f"clean_{b - 1}", case)
+            assert len(run(case, b, crash_at=k)) == min(k, n_steps[b])
+            assert replayed(case, b) == clean[b], f"batch {b} killed at step {k}"
+
+    shutil.copytree(tmp_path / "clean_2", tmp_path / "late")
+    assert replayed(tmp_path / "late", 1) == clean[2]
+
+    if kind == "events":  # the swap mergers' hand-built leftovers
+        def current(b):
+            return tmp_path / f"clean_{b}" / "current"
+
+        case = tmp_path / "staging_9_10"
+        shutil.copytree(current(0), case / "staging_9")
+        shutil.copytree(current(1), case / "staging_10")
+        assert replayed(case, 0) == clean[1]
+
+        case = tmp_path / "unledgered_staging"
+        shutil.copytree(current(0), case / "old_1")
+        shutil.copytree(current(1), case / "staging_1")
+        os.remove(case / "staging_1" / SW.HIST_APPLIED_FILE)
+        assert replayed(case, 1) == clean[1]
